@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Bench harness (BASELINE.md §2): wall-clock per query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -34,18 +35,11 @@ object Bench {
     val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .filter(_.nonEmpty).getOrElse(cpus)
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
       // ERROR, not WARN: the per-query sweep's blocking unpersist of
       // localCheckpointed frames logs a (harmless, intended) WARN per
       // RDD — hundreds of lines per suite that would bury the one JSON
       // line the driver tails this main for
-      s.sparkContext.setLogLevel("ERROR")
-      s
+      Sessions.local(s"local[$cpus]", shufflePartitions, "ERROR")
     }
     var spark = newSession()
     // A/B diagnostic toggle for the sweep (default on)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 import scala.collection.mutable
 
@@ -29,13 +29,7 @@ object Profile {
     val names = if (args.nonEmpty) args.toSeq
       else sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(s"local[$cpus]", cpus, "ERROR")
 
     case class JobRec(id: Int, desc: String, start: Long,
       var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0,

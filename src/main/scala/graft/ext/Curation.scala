@@ -918,7 +918,8 @@ object Curation {
   /** x20 — INCREMENTAL fuzzy dedup: x06's stored-index pattern upgraded
     * from exact fingerprints to MinHash LSH. Production shape: the
     * corpus keeps a persisted BAND INDEX table (band, band-value,
-    * doc_id — d10's md5 Carter-Wegman family, 8 sigs banded 2×4); each
+    * doc_id — d10's md5 Carter-Wegman family and its shingle,
+    * signature and band steps, 8 sigs banded 2×4); each
     * arriving batch is shingled/hashed ALONE, probes the index with one
     * equi-join, and only the candidates get the exact-Jaccard confirm.
     * History is never re-paired against itself — the n² of the corpus
@@ -937,51 +938,23 @@ object Curation {
       "x20_incremental_fuzzy",
       (s, d) => {
         val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val shingled = Tables.documents(s, d)
-          .select(col("doc_id"),
-            expr("substring(md5(CAST(doc_id AS STRING)), 1, 1) < '2'")
-              .as("is_new"),
-            expr(s"array_distinct(${Dedup.shingleExpr("text")})").as("sh"))
+        val fam = Dedup.MinHashFamily.Md5
+        val shingled = Dedup.minhashShingles(Tables.documents(s, d), fam)
           .persist(lvl)
-        val sigCols = (0 until K).map(k =>
-          min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-        val sigs = shingled
-          .select(col("doc_id"), col("is_new"), explode(col("sh")).as("s2"))
-          .select(col("doc_id"), col("is_new"),
-            expr(Dedup.sparkMd5Int60("s2")).as("ha"),
-            expr("CAST(conv(substring(md5(s2), 17, 14), 16, 10) AS BIGINT)")
-              .as("hb"))
-          .groupBy("doc_id", "is_new")
-          .agg(sigCols.head, sigCols.tail: _*)
-        val bandCols = (0 until K / bandRows).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws(",",
-              (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-              .as("bv")).as(s"b$b")
-        }
-        val bands = sigs
-          .select(col("doc_id"), col("is_new"),
-            explode(array(bandCols: _*)).as("bb"))
-          .select(col("doc_id"), col("is_new"),
-            col("bb.band").as("band"), col("bb.bv").as("bv"))
+        val bands = Dedup.minhashBands(
+            Dedup.minhashSignatures(shingled, fam, K), fam, K, bandRows)
+          .withColumn("is_new",
+            expr("substring(md5(CAST(doc_id AS STRING)), 1, 1) < '2'"))
         val index = bands.filter(!col("is_new"))
-          .select(col("doc_id").as("old_id"), col("band"), col("bv"))
+          .select(col("doc_id").as("b_id"), col("band"), col("bv"))
         val batch = bands.filter(col("is_new"))
-          .select(col("doc_id").as("new_id"), col("band"), col("bv"))
+          .select(col("doc_id").as("a_id"), col("band"), col("bv"))
         val cand = batch.join(index, Seq("band", "bv"))
-          .select("new_id", "old_id").distinct()
-        val sa = shingled.select(col("doc_id").as("new_id"), col("sh").as("a_sh"))
-        val sb = shingled.select(col("doc_id").as("old_id"), col("sh").as("b_sh"))
-        val out = cand.join(sa, "new_id").join(sb, "old_id")
-          .withColumn("n_inter", expr("size(array_intersect(a_sh, b_sh))"))
-          .withColumn("jaccard", expr(
-            "CAST(n_inter AS DOUBLE) / (size(a_sh) + size(b_sh) - n_inter)"))
-          .filter(col("jaccard") >= theta)
-          .select("new_id", "old_id", "jaccard")
+          .select("a_id", "b_id").distinct()
+        Dedup.minhashConfirm(cand, shingled, col("jaccard") >= theta)
+          .select(col("a_id").as("new_id"), col("b_id").as("old_id"),
+            col("jaccard"))
           .orderBy("new_id", "old_id")
-          .localCheckpoint()
-        shingled.unpersist()
-        out
       },
       Some(s"""WITH toks AS (
                  SELECT doc_id,
@@ -4276,7 +4249,8 @@ object Curation {
       },
       s1 => {
         val pairs =
-          Dedup.minhashMd5Pairs(s1, MfK, MfBandRows, MfTheta, MfCap)
+          Dedup.minhashPairs(s1, Dedup.MinHashFamily.Md5, MfK, MfBandRows,
+            MfCap, col("jaccard") >= MfTheta)
         val dropIds =
           if (!ccStage2) pairs.select(col("b_id").as("doc_id")).distinct()
           else Dedup.connectedComponents(pairs.select("a_id", "b_id"))
@@ -4488,7 +4462,7 @@ object Curation {
     * Output: one row per stage — rows_in/rows_out/n_dropped and
     * chars_in/chars_out/chars_dropped — the per-stage accounting frame
     * a 100 TB curation run publishes next to its output manifest. Every
-    * stage reuses the STANDALONE operator's engine (minhashMd5Pairs,
+    * stage reuses the STANDALONE operator's engine (minhashPairs,
     * gopherFlaggedDf, ngramExpr+broadcast semi, TopKPerKey,
     * dsirDocScores) and the DuckDB mirror reuses the same generated CTE
     * chains (minhashMd5PairsCte, gopherFlagsCte, dsirScoreCte), so the

@@ -119,231 +119,306 @@ object Dedup {
     },
     None)
 
-  /** Engine-native MinHash+LSH — the same Broder scheme as d02 but
-    * expressed entirely in Catalyst expressions instead of spark.ml's
-    * 2^18-dim sparse vectors: 16 xxhash64 min-signatures per doc, banded
-    * 4×4 for candidates (equi join on (band, value)), exact Jaccard via
-    * array_intersect on the candidate pairs only. Same shape at 100 TB:
-    * linear signature pass + equi shuffle, never all-pairs.
-    *
-    * The signature frame is materialized via localCheckpoint (see below);
-    * checkpointed RDDs are GC-reclaimed, so repeated invocations leak no
-    * session-lifetime cache entries. */
-  def minhashNativePairs(
-      docs: DataFrame,
-      maxJaccardDist: Double,
-      maxBucketSize: Int = 64): DataFrame = {
-    // cached: the shingle pass (regex tokenize + distinct — the most
-    // expensive linear pass) feeds the signature aggregate AND both
-    // sides of the final candidate join; uncached it runs three times
-    // (measured ~2× slower end-to-end).
-    // Hashed-shingle representation: each word is string-hashed ONCE,
-    // then each 3-shingle is the xxhash64 of its 3 word-hashes — so the
-    // pass does #words string hashes instead of building and hashing a
-    // concat'd string per shingle POSITION (~3× the string work), and
-    // every downstream step (signature family, exact-Jaccard
-    // array_intersect, the cache itself) operates on 8-byte longs, not
-    // strings. Jaccard over distinct hashed shingles equals Jaccard over
-    // distinct string shingles modulo hash collisions, which can only
-    // perturb a pair's estimated distance — never create a blowup. The
-    // two transforms stay in SEPARATE projections (wh referenced twice →
-    // CollapseProject won't inline the split per shingle position).
-    val shingled = Tables.fanOutForCpu(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        expr("transform(split(text, ' '), x -> xxhash64(x))").as("wh"))
-      .select(col("doc_id"), expr(
-        "array_distinct(transform(sequence(0, greatest(size(wh) - 3, 0)), " +
-          "i -> xxhash64(slice(wh, i + 1, 3))))").as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // 16 min-signatures via ONE explode + hash-aggregate (partial-agg,
-    // whole-stage codegen): per shingle-hash long, 16 seeded long
-    // hashes — no string ever reaches the signature aggregate.
-    val sigCols = (0 until 16).map(i =>
-      min(xxhash64(col("h"), lit(i))).as(s"sig_$i"))
-    // Materialized eagerly (own job): four downstream branches (band
-    // explode, bucket-size cap, dup-rep agg, dup-cluster join) consume
-    // the signature frame inside ONE action; a lazy cache races its own
-    // concurrent scans there (measured slower), and exchange reuse alone
-    // re-runs the post-shuffle agg per consumer. The frame is #docs × 17
-    // longs — tiny relative to the exploded shingle pass it seals off —
-    // and checkpointed RDDs are GC-reclaimed, so nothing leaks.
-    val sigs = shingled
-      .select(col("doc_id"), explode(col("sh")).as("h"))
+  /** A MinHash hash family (Broder 1997): the shingle form, the
+    * per-shingle hash, the k-th min-hash signature and the band key.
+    * Every MinHash query names its family; the steps below
+    * ([[minhashShingles]], [[minhashSignatures]], [[minhashBands]],
+    * [[minhashPairs]]) are written once over it. */
+  sealed trait MinHashFamily {
+    /** (doc_id, text) → (doc_id, sh): the distinct shingles of a doc. */
+    def shingle(docs: DataFrame): DataFrame
+    /** (doc_id, s) → (doc_id, the hash columns [[signature]] reads). */
+    def hash(shingles: DataFrame): DataFrame
+    /** Aggregate for the k-th min-hash signature. */
+    def signature(k: Int): Column
+    /** Bucket key of one band's signature columns. */
+    def bandKey(sigs: Seq[Column]): Column
+  }
+
+  object MinHashFamily {
+    /** xxhash64 over hashed word-triples — engine-native, no SQL mirror
+      * (d06). Each word is string-hashed ONCE, then each 3-shingle is
+      * the xxhash64 of its 3 word-hashes, so the pass does #words
+      * string hashes instead of building and hashing a concat'd string
+      * per shingle POSITION (~3× the string work), and every downstream
+      * step (signatures, exact-Jaccard array_intersect, the shingle
+      * cache) works on 8-byte longs. Jaccard over distinct hashed
+      * shingles equals Jaccard over distinct string shingles modulo
+      * hash collisions, which can only perturb a pair's estimate. The
+      * two transforms stay in SEPARATE projections (wh referenced twice
+      * → CollapseProject won't inline the split per shingle position).
+      * The k-th signature is xxhash64 of the shingle hash seeded by k;
+      * a band key is the xxhash64 of its signatures. */
+    case object XxHash64 extends MinHashFamily {
+      def shingle(docs: DataFrame): DataFrame = docs
+        .select(col("doc_id"),
+          expr("transform(split(text, ' '), x -> xxhash64(x))").as("wh"))
+        .select(col("doc_id"), expr(
+          "array_distinct(transform(sequence(0, greatest(size(wh) - 3, 0)), " +
+            "i -> xxhash64(slice(wh, i + 1, 3))))").as("sh"))
+      def hash(shingles: DataFrame): DataFrame =
+        shingles.select(col("doc_id"), col("s").as("h"))
+      def signature(k: Int): Column = min(xxhash64(col("h"), lit(k)))
+      def bandKey(sigs: Seq[Column]): Column = xxhash64(sigs: _*)
+    }
+
+    /** md5 Carter-Wegman over string shingles — the oracle-portable
+      * family (d10, d17, x20, x62): ONE md5 per [[shingleExpr]] shingle
+      * split into two integer halves (a: 60 bits from hex chars 2-16,
+      * b: 56 bits from chars 17-30; Spark `conv` ≡ DuckDB hex-digit
+      * fold, verified bit-equal), expanded by the 2-universal family
+      * h_k = a + k·b — no overflow (7·2^56 + 2^60 < 2^63), no per-k
+      * rehash, and pure arithmetic for the SQL mirror. A band key is
+      * the comma-joined signature slice (string equality on both
+      * engines). The md5 is its own projection and both halves are
+      * sliced from it — ONE md5 evaluation per shingle without leaning
+      * on codegen subexpression elimination for the hottest expression
+      * of the query. */
+    case object Md5 extends MinHashFamily {
+      def shingle(docs: DataFrame): DataFrame = docs.select(col("doc_id"),
+        expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
+      def hash(shingles: DataFrame): DataFrame = shingles
+        .select(col("doc_id"), md5(col("s")).as("m"))
+        .select(col("doc_id"), expr(sparkHexIntSlice("m", 2, 15)).as("ha"),
+          expr(sparkHexIntSlice("m", 17, 14)).as("hb"))
+      def signature(k: Int): Column = min(expr(s"ha + $k * hb"))
+      def bandKey(sigs: Seq[Column]): Column = concat_ws(",", sigs: _*)
+    }
+  }
+
+  /** Shingle step of every MinHash query: (doc_id, sh) per document.
+    * Null-text documents are dropped here — they have no shingles, and
+    * the DuckDB mirror pairs none of them; left in, every family would
+    * shingle them to one shared constant and report them as exact
+    * duplicates of each other. The fan-out gives the CPU-heavy
+    * tokenize + hash pass more than one task on single-file inputs. */
+  def minhashShingles(docs: DataFrame, family: MinHashFamily): DataFrame =
+    family.shingle(Tables.fanOutForCpu(
+      docs.filter(col("text").isNotNull).select("doc_id", "text"),
+      col("doc_id")))
+
+  /** Signature step: `K` min-hash columns sig_0 … sig_{K-1} per doc, via
+    * ONE explode + hash-aggregate (partial agg, whole-stage codegen). */
+  def minhashSignatures(shingled: DataFrame, family: MinHashFamily,
+      K: Int): DataFrame = {
+    val sigCols = (0 until K).map(k => family.signature(k).as(s"sig_$k"))
+    family.hash(shingled.select(col("doc_id"), explode(col("sh")).as("s")))
       .groupBy("doc_id")
       .agg(sigCols.head, sigCols.tail: _*)
-      .localCheckpoint()
-    val sigNames = (0 until 16).map(i => s"sig_$i")
-    val bandCols = (0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until 4).map(r => col(s"sig_${b * 4 + r}")): _*).as("bv"))
-        .as(s"b$b"))
-    val bands = sigs
-      .select(col("doc_id"), array(bandCols: _*).as("bands"))
-      .select(col("doc_id"), explode(col("bands")).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
+  }
 
-    // Mega-bucket cap (standard LSH hygiene): on homogeneous corpora the
-    // globally-minimal shingles dominate the min-signatures, collapsing
-    // most docs into a few buckets whose pairing is quadratic noise.
-    // Computed as a partial-aggregated groupBy count + broadcast anti
-    // join — NOT an unordered window, which would buffer each mega-bucket
-    // in one task just to discard it.
+  /** Band step: one (doc_id, band, bv) row per document per band of
+    * `bandRows` consecutive signatures. Identical documents share every
+    * band, so an index probe on (band, bv) never misses an exact dup —
+    * the incremental band index of x20 and of the streaming admission
+    * pattern is this frame. */
+  def minhashBands(sigs: DataFrame, family: MinHashFamily, K: Int,
+      bandRows: Int): DataFrame = {
+    require(K % bandRows == 0, "bands must tile the signature")
+    val bandCols = (0 until K / bandRows).map(b =>
+      struct(lit(b).as("band"), family.bandKey(
+        (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}"))).as("bv")))
+    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
+  }
+
+  /** The (band, bv) candidate self-join of every LSH query: each
+    * `probes` row meets every `bands` row of its bucket, as (a_id, b_id)
+    * with a_id < b_id plus each side's `carry` columns renamed a_<c> /
+    * b_<c>. A pair sharing several buckets repeats; callers distinct. */
+  def bandJoin(probes: DataFrame, bands: DataFrame,
+      carry: String*): DataFrame = {
+    def side(df: DataFrame, p: String) = df.select(
+      Seq(col("doc_id").as(s"${p}_id"), col("band"), col("bv")) ++
+        carry.map(c => col(c).as(s"${p}_$c")): _*)
+    side(probes, "a").join(side(bands, "b"), Seq("band", "bv"))
+      .filter(col("a_id") < col("b_id"))
+      .select((Seq("a_id", "b_id") ++
+        carry.flatMap(c => Seq(s"a_$c", s"b_$c"))).map(col): _*)
+  }
+
+  /** Exact-Jaccard confirm of every MinHash query: each candidate
+    * (a_id, b_id) re-joins both docs' shingle arrays from `shingled`
+    * and is kept when its exact shingle Jaccard passes `keep` (a
+    * predicate over the `jaccard` column), as (a_id, b_id, jaccard).
+    * The candidate-bounded result is checkpointed and the caller's
+    * corpus-scale `shingled` cache released before returning. */
+  def minhashConfirm(cand: DataFrame, shingled: DataFrame,
+      keep: Column): DataFrame = {
+    val sa = shingled.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
+    val sb = shingled.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
+    val out = cand.join(sa, "a_id").join(sb, "b_id")
+      .withColumn("n_inter", expr("size(array_intersect(a_sh, b_sh))"))
+      .withColumn("jaccard", expr(
+        "CAST(n_inter AS DOUBLE) / (size(a_sh) + size(b_sh) - n_inter)"))
+      .filter(keep)
+      .select("a_id", "b_id", "jaccard")
+      .localCheckpoint()
+    shingled.unpersist()
+    out
+  }
+
+  /** MinHash LSH near-dup pairs (a_id, b_id, jaccard) whose exact
+    * shingle Jaccard passes `keep` (a predicate over `jaccard`): `K`
+    * signatures of `family` banded `bandRows` per band, candidates from
+    * the band equi-join only — never all-pairs — then
+    * [[minhashConfirm]]. Linear signature pass + equi shuffle at any
+    * scale.
+    *
+    * Mega-bucket cap (standard LSH hygiene): on homogeneous corpora the
+    * globally-minimal shingles dominate the min-signatures, collapsing
+    * most docs into a few buckets whose pairing is quadratic noise;
+    * buckets larger than `maxBucketSize` are dropped via a partial-
+    * aggregated count + broadcast anti join (NOT an unordered window,
+    * which would buffer each mega-bucket in one task just to discard
+    * it). The cap would also drop duplicate CLUSTERS bigger than it
+    * (identical docs share every band — their only buckets ARE the mega
+    * ones), so they are recovered linearly: docs with identical raw
+    * signatures pair with the cluster's min-id representative (n−1
+    * pairs per cluster, transitively complete, never n²/2).
+    *
+    * Materialization: the shingle frame is cached (it feeds the
+    * signature pass AND both sides of the exact-Jaccard join); the
+    * signature frame is localCheckpointed eagerly (band explode,
+    * bucket cap, dup-rep aggregate and dup-cluster join all consume it
+    * in ONE action — a lazy cache races its own concurrent scans there,
+    * measured slower — and it is only #docs × (K+1) longs); the
+    * candidate-bounded pair list, already filtered by `keep`, is
+    * checkpointed so the corpus-scale shingle cache is dropped before
+    * returning. Checkpointed RDDs are GC-reclaimed, so repeated
+    * invocations leak nothing. */
+  def minhashPairs(docs: DataFrame, family: MinHashFamily, K: Int,
+      bandRows: Int, maxBucketSize: Int, keep: Column): DataFrame = {
+    val shingled = minhashShingles(docs, family)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = minhashSignatures(shingled, family, K).localCheckpoint()
+    val bands = minhashBands(sigs, family, K, bandRows)
     val bigBuckets = bands.groupBy("band", "bv")
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > maxBucketSize)
       .select("band", "bv")
     val kept = bands.join(broadcast(bigBuckets), Seq("band", "bv"), "left_anti")
-
-    // The cap would also drop duplicate CLUSTERS bigger than the cap
-    // (identical docs share every band — their only buckets ARE the mega
-    // ones). Recover them linearly: group identical full signatures and
-    // pair each member with the min-id representative (n−1 pairs per
-    // cluster, transitively complete, never n²/2). The group/join key is
-    // xxhash64 over all 16 signatures — an 8-byte shuffle key instead of
-    // the 128-byte raw tuple. A key collision merges two UNRELATED dup
-    // clusters under one representative: the foreign cross-pairs are
-    // discarded by the exact-Jaccard filter below, and the smaller
-    // cluster's intra-pairs are then lost IF its members were also
-    // mega-bucket-capped out of the banded path — an accepted ~2⁻⁶⁴
-    // failure mode (per pair of clusters), traded for the 16× smaller
-    // recovery shuffle.
-    val keyed = sigs.withColumn("sigkey",
-      xxhash64(sigNames.map(col): _*))
-    val dupReps = keyed.groupBy("sigkey")
+    val sigNames = (0 until K).map(k => s"sig_$k")
+    val dupReps = sigs.groupBy(sigNames.map(col): _*)
       .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
       .filter(col("n") > 1)
-      .select("sigkey", "rep")
-    val dupClusters = keyed.join(dupReps, "sigkey")
+      .select(sigNames.map(col) :+ col("rep"): _*)
+    val dupClusters = sigs.join(dupReps, sigNames)
       .filter(col("doc_id") =!= col("rep"))
       .select(col("rep").as("a_id"), col("doc_id").as("b_id"))
-
-    // ids-only banded candidates; shingle arrays re-join AFTER distinct
-    val a = kept.select(col("doc_id").as("a_id"), col("band"), col("bv"))
-    val b = kept.select(col("doc_id").as("b_id"), col("band"), col("bv"))
-    val cand = a.join(b, Seq("band", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .union(dupClusters)
-      .distinct()
-    val sa = shingled.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
-    val sb = shingled.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
-    val out = cand.join(sa, "a_id").join(sb, "b_id")
-      .withColumn("n_inter", expr("size(array_intersect(a_sh, b_sh))"))
-      .withColumn("jaccard_dist", expr(
-        "1.0 - CAST(n_inter AS DOUBLE) / (size(a_sh) + size(b_sh) - n_inter)"))
-      .filter(col("jaccard_dist") < maxJaccardDist)
-      .select("a_id", "b_id", "jaccard_dist")
-    // pair list is candidate-bounded (small); materialize it so the
-    // corpus-scale shingle cache can be dropped before returning —
-    // repeated invocations (bench warmup + timed runs) leak no entries
-    val materialized = out.localCheckpoint()
-    shingled.unpersist()
-    materialized
+    // ids-only candidates; shingle arrays re-join AFTER distinct
+    val cand = bandJoin(kept, kept).union(dupClusters).distinct()
+    minhashConfirm(cand, shingled, keep)
   }
 
-  /** d06 — the native-expression MinHash path as a registered query
-    * (rows-only: hash-family specific, like d02). */
+  /** d06 — the engine-native MinHash path as a registered query: the
+    * same Broder scheme as d02 in Catalyst expressions instead of
+    * spark.ml's 2^18-dim sparse vectors — [[minhashPairs]] with the
+    * xxhash64 family, 16 signatures banded 4×4, bucket cap 64, reported
+    * as Jaccard distance < 0.95 (rows-only: hash-family specific, like
+    * d02). */
   val minhashNative: QueryDef = QueryDef(
     "d06_dedup_minhash_native",
-    (s, d) => minhashNativePairs(Tables.documents(s, d), 0.95)
+    (s, d) => minhashPairs(Tables.documents(s, d), MinHashFamily.XxHash64,
+        16, 4, 64, lit(1.0) - col("jaccard") < 0.95)
+      .select(col("a_id"), col("b_id"),
+        (lit(1.0) - col("jaccard")).as("jaccard_dist"))
       .orderBy("a_id", "b_id"),
     None)
 
-  /** 64-bit SimHash (Charikar, "Similarity estimation techniques from
-    * rounding algorithms", STOC 2002) per document: xxhash64 each token, per-bit ±1 votes,
-    * sign-pack into a long. One explode + one aggregate — linear at scale. */
-  def simhash(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
-    val hashed = toks.select(col("doc_id"), xxhash64(col("tok")).as("h"))
-    val voteCols = (0 until 64).map { i =>
+  /** A SimHash token-hash family (Charikar, "Similarity estimation
+    * techniques from rounding algorithms", STOC 2002): a `bits`-bit
+    * signature from the per-token hash `tokenHash` of a token column. */
+  sealed abstract class SimHashFamily(val bits: Int,
+      val tokenHash: String => Column)
+
+  object SimHashFamily {
+    /** 64-bit over xxhash64 — engine-native (d03, d09). */
+    case object XxHash64 extends SimHashFamily(64, t => xxhash64(col(t)))
+    /** 60-bit over [[sparkMd5Int60]] — mirrored bit-exactly by
+      * [[simhashMd5SigsSql]] (d11, d21, m05). */
+    case object Md5 extends SimHashFamily(60, t => expr(sparkMd5Int60(t)))
+  }
+
+  /** SimHash signature (doc_id, simhash) per document: hash each token,
+    * per-bit ±1 votes, sign-pack into a long. One explode + one
+    * aggregate — linear at scale.
+    *
+    * The vote sums stay FUSED inside the aggregate (each computes its ±1
+    * on the fly from `h`): pre-projecting the vote columns before the
+    * agg was measured 2× slower (3.3 s vs 1.6 s focused sf0.1 median on
+    * d11) because every token row then carries `bits` materialized ints
+    * into the aggregation hash map. */
+  def simhash(docs: DataFrame, family: SimHashFamily): DataFrame = {
+    val hashed = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("doc_id"), family.tokenHash("tok").as("h"))
+    val voteCols = (0 until family.bits).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
         .otherwise(-1)).as(s"b$i")
     }
     val votes = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-    val packed = (0 until 64).map { i =>
+    val packed = (0 until family.bits).map { i =>
       when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
     votes.select(col("doc_id"), packed.as("simhash"))
   }
 
-  /** Banded SimHash near-dup candidates — the 100 TB path: each 64-bit
-    * signature splits into 4×16-bit bands; only pairs colliding on at
-    * least one band bucket are compared (equi shuffle on (band, value),
-    * never all-pairs). Guaranteed recall for hamming ≤ 3 (pigeonhole);
-    * approximate above. Output ⊆ the exact all-pairs result. */
-  def simhashBandedPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val sh = simhash(docs)
-    val bands = sh.select(col("doc_id"), col("simhash"),
-      explode(expr(
-        "transform(sequence(0, 3), b -> struct(b AS band, " +
-          "shiftright(simhash, b * 16) & 65535 AS bv))")).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-    val a = bands.select(col("doc_id").as("a_id"), col("simhash").as("a_sh"),
-      col("band"), col("bv"))
-    val b = bands.select(col("doc_id").as("b_id"), col("simhash").as("b_sh"),
-      col("band"), col("bv"))
-    a.join(b, Seq("band", "bv")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_sh", "b_sh").distinct()
-      .withColumn("hamming", expr("bit_count(a_sh ^ b_sh)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** Multi-probe banded SimHash pairs — EXACT at the covered radius,
-    * candidate generation a pure equi-join (the r10 VERDICT fix for
-    * d03's all-pairs BroadcastNestedLoopJoin).
+  /** Banded SimHash pairs (a_id, b_id, hamming) at Hamming ≤ `maxHamming`
+    * over a [[simhash]] signature frame — the 100 TB path: the signature
+    * splits into `nBands` disjoint `bandBits`-bit bands, and only pairs
+    * colliding on a (band, value) bucket are compared (equi shuffle,
+    * never all-pairs); candidates are then hamming-filtered exactly.
     *
-    * Scheme (multi-index Hamming search, Norouzi et al. "Fast Search
-    * in Hamming Space with Multi-Index Hashing", CVPR 2012): split the
-    * signature into `nBands` disjoint `bandBits`-bit bands; for radius
-    * ≤ 2·nBands − 1 the pigeonhole gives SOME band with ≤ 1 differing
-    * bit, so probing each band's value XOR {0, each single bit} —
-    * bandBits + 1 probe keys per band — guarantees a (band, value)
-    * equi-collision for every qualifying pair. Candidates are then
-    * hamming-filtered exactly, so output EQUALS the all-pairs result
-    * at `maxHamming` (asserted in DedupSpec against brute force).
+    * `probeRadius` 0 (d09, d11, m05): each band is its own probe key. A
+    * pair at hamming ≤ nBands − 1 leaves some band clean (pigeonhole),
+    * so there the output EQUALS the all-pairs result; above it, a
+    * subset.
     *
-    * Scale shape: probe fan-out is a CONSTANT nBands·(bandBits+1) rows
-    * per doc (68 for 4×16-bit bands) into a (band, value) equi-join
-    * over 2^bandBits buckets per band — d09's shuffle shape with a
-    * bounded row multiplier, never a nested loop. The banded frame is
-    * localCheckpointed because it feeds both join sides (d11's
-    * signatures-table discipline: 4 rows/doc × ~32 B, text never
-    * enters). Skewed buckets (mass-duplicated content) get the d06/d10
-    * mega-bucket treatment upstream if needed — at the fixture scales
-    * every bucket is tiny. */
-  def multiProbePairs(sh: DataFrame, bandBits: Int, nBands: Int,
-      maxHamming: Int): DataFrame = {
-    require(maxHamming <= 2 * nBands - 1,
-      s"probe radius 1 over $nBands bands covers hamming <= ${2 * nBands - 1}")
+    * `probeRadius` 1 (d03, d21 — multi-index Hamming search, Norouzi et
+    * al. "Fast Search in Hamming Space with Multi-Index Hashing", CVPR
+    * 2012): each band value is also probed XOR each single bit
+    * (bandBits + 1 keys per band). For radius ≤ 2·nBands − 1 the
+    * pigeonhole leaves SOME band with ≤ 1 differing bit, so every
+    * qualifying pair equi-collides and the output EQUALS the all-pairs
+    * result (asserted in DedupSpec against brute force). The fan-out is
+    * a CONSTANT nBands·(bandBits+1) rows per doc — a bounded row
+    * multiplier on the same shuffle, never a nested loop.
+    *
+    * The band frame is localCheckpointed: it feeds both join sides, and
+    * without materialization Spark plans the whole signature pipeline
+    * (tokenize → hash → vote aggregate) twice — the dominant stage,
+    * recomputed verbatim (r9 focused bench: ~2× on m05/d11). It is
+    * nBands rows/doc × ~32 B (text never enters it), a signatures-table
+    * write at 100 TB, not a cache of the input. */
+  def simhashBandPairs(sigs: DataFrame, bandBits: Int, nBands: Int,
+      probeRadius: Int, maxHamming: Int): DataFrame = {
+    require(probeRadius == 0 || probeRadius == 1,
+      s"probe radius is 0 or 1, not $probeRadius")
+    if (probeRadius == 1)
+      require(maxHamming <= 2 * nBands - 1,
+        s"probe radius 1 over $nBands bands covers hamming <= ${2 * nBands - 1}")
     val m = (1L << bandBits) - 1
-    val masks = (Seq(0L) ++ (0 until bandBits).map(1L << _)).mkString(",")
-    val bands = sh.select(col("doc_id"), col("simhash"),
+    val bands = sigs.select(col("doc_id"), col("simhash"),
       explode(expr(
         s"transform(sequence(0, ${nBands - 1}), b -> struct(b AS band, " +
           s"shiftright(simhash, b * $bandBits) & $m AS bv))")).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.band").as("band"), col("bb.bv").as("bv"))
       .localCheckpoint()
-    val probes = bands.select(col("doc_id").as("a_id"),
-        col("simhash").as("a_sh"), col("band"),
-        explode(expr(s"transform(array($masks), mm -> bv ^ mm)")).as("bv"))
-    val exacts = bands.select(col("doc_id").as("b_id"),
-      col("simhash").as("b_sh"), col("band"), col("bv"))
-    probes.join(exacts, Seq("band", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_sh", "b_sh").distinct()
-      .withColumn("hamming", expr("bit_count(a_sh ^ b_sh)"))
+    val probes = if (probeRadius == 0) bands else {
+      val masks = (Seq(0L) ++ (0 until bandBits).map(1L << _)).mkString(",")
+      bands.withColumn("bv", explode(expr(s"transform(array($masks), mm -> bv ^ mm)")))
+    }
+    bandJoin(probes, bands, "simhash").distinct()
+      .withColumn("hamming", expr("bit_count(a_simhash ^ b_simhash)"))
       .filter(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
   }
 
-  /** d03 — SimHash near-dup pairs at Hamming ≤ 7 via [[multiProbePairs]]
-    * over the 64-bit xxhash64 signature (4×16-bit bands, 68 probe keys
-    * per doc).
+  /** d03 — SimHash near-dup pairs at Hamming ≤ 7: [[simhashBandPairs]]
+    * at probe radius 1 over the 64-bit xxhash64 signature (4×16-bit
+    * bands, 68 probe keys per doc).
     *
     * CONTRACT RESTATED in round 11 (VERDICT r10 ask #1): the original
     * radius-16 form required an all-pairs BroadcastNestedLoopJoin —
@@ -357,7 +432,8 @@ object Dedup {
     * oracle-exact twin of THIS shape at the same radius. */
   val simhashPairs: QueryDef = QueryDef(
     "d03_dedup_simhash",
-    (s, d) => multiProbePairs(simhash(Tables.documents(s, d)), 16, 4, 7)
+    (s, d) => simhashBandPairs(
+        simhash(Tables.documents(s, d), SimHashFamily.XxHash64), 16, 4, 1, 7)
       .orderBy("a_id", "b_id"),
     None)
 
@@ -724,15 +800,25 @@ object Dedup {
     * DedupSpec — while the plan stays an equi shuffle on (band, value). */
   val simhashBanded: QueryDef = QueryDef(
     "d09_dedup_simhash_banded",
-    (s, d) => simhashBandedPairs(Tables.documents(s, d), 3)
+    (s, d) => simhashBandPairs(
+        simhash(Tables.documents(s, d), SimHashFamily.XxHash64), 16, 4, 0, 3)
       .orderBy("a_id", "b_id"),
     None)
 
   /** Portable 60-bit integer hash — the piece that makes d10/d11
     * oracle-exact: md5 hex chars 2-16 parsed as an integer. Both sides
     * verified bit-equal (md5('abc') → 370089762377648 on each). */
-  def sparkMd5Int60(arg: String): String =
-    s"CAST(conv(substring(md5($arg), 2, 15), 16, 10) AS BIGINT)"
+  def sparkMd5Int60(arg: String): String = sparkMd5IntSlice(arg, 2, 15)
+
+  /** md5 hex chars [from, from+len) of `arg` parsed as an integer — the
+    * Spark twin of [[duckMd5IntSlice]]. */
+  def sparkMd5IntSlice(arg: String, from: Int, len: Int): String =
+    sparkHexIntSlice(s"md5($arg)", from, len)
+
+  /** Hex chars [from, from+len) of the hex-string column `hex` parsed as
+    * an integer (the md5 family slices one md5 column twice). */
+  def sparkHexIntSlice(hex: String, from: Int, len: Int): String =
+    s"CAST(conv(substring($hex, $from, $len), 16, 10) AS BIGINT)"
 
   /** DuckDB mirror of [[sparkMd5Int60]]: hex-digit fold (DuckDB has no
     * hex-to-int conv built-in). */
@@ -747,130 +833,8 @@ object Dedup {
               substring(md5($arg), i, 1)) - 1 AS BIGINT))),
           (a, d) -> a * 16 + d)"""
 
-  /** Core of d10: md5-keyed MinHash pairs over an arbitrary documents
-    * frame, with the same mega-bucket hygiene as d06: buckets larger
-    * than maxBucketSize are dropped (their pairing is quadratic noise)
-    * and duplicate clusters — whose only buckets ARE the mega ones — are
-    * recovered linearly via identical-full-signature grouping (n−1 pairs
-    * per cluster, never n²/2). Eagerly materialized (the pair list is
-    * candidate-bounded) so the corpus-scale shingle cache never outlives
-    * the call. */
-  def minhashMd5Pairs(
-      docs: DataFrame,
-      numHashes: Int = 8,
-      bandRows: Int = 4,
-      theta: Double = 0.5,
-      maxBucketSize: Int = 64): DataFrame = {
-    require(numHashes % bandRows == 0, "bands must tile the signature")
-    val shingled = Tables.fanOutForCpu(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE md5 per shingle, then the Carter-Wegman 2-universal family
-    // h_k = a + k·b over its two halves (a: 60 bits from hex chars 2-16,
-    // b: 56 bits from chars 17-30) — no overflow (7·2^56 + 2^60 < 2^63),
-    // no per-k rehash, and pure arithmetic for the SQL mirror.
-    val sigCols = (0 until numHashes).map(k =>
-      min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-    // cached: sigs feeds THREE branches (banding, dup-rep aggregate, and
-    // the dup-cluster join) — uncached, each branch would re-run the
-    // md5+conv hash pass over the whole shingle set. One row per doc ×
-    // numHashes longs, so the cache is corpus-count-sized, not
-    // corpus-sized.
-    val sigs = shingled
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      // ONE md5 evaluation per shingle, both integer halves sliced from
-      // it — don't lean on codegen subexpression elimination for the
-      // hottest expression in the query
-      .select(col("doc_id"), md5(col("s")).as("m"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
-        expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb"))
-      .groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandCols = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",",
-          (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-          .as("bv")).as(s"b$b")
-    }
-    val bands = sigs
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-    val bigBuckets = bands.groupBy("band", "bv")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucketSize)
-      .select("band", "bv")
-    val kept = bands.join(broadcast(bigBuckets), Seq("band", "bv"), "left_anti")
-    // duplicate-cluster recovery (see d06): identical docs share every
-    // band, so the cap would orphan clusters bigger than it
-    val sigNames = (0 until numHashes).map(i => s"sig_$i")
-    val dupReps = sigs.groupBy(sigNames.map(col): _*)
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select(sigNames.map(col) :+ col("rep"): _*)
-    val dupClusters = sigs.join(dupReps, sigNames)
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a_id"), col("doc_id").as("b_id"))
-    val a = kept.select(col("doc_id").as("a_id"), col("band"), col("bv"))
-    val b = kept.select(col("doc_id").as("b_id"), col("band"), col("bv"))
-    val cand = a.join(b, Seq("band", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .union(dupClusters)
-      .distinct()
-    val sa = shingled.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
-    val sb = shingled.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
-    val out = cand.join(sa, "a_id").join(sb, "b_id")
-      .withColumn("n_inter", expr("size(array_intersect(a_sh, b_sh))"))
-      .withColumn("jaccard", expr(
-        "CAST(n_inter AS DOUBLE) / (size(a_sh) + size(b_sh) - n_inter)"))
-      .filter(col("jaccard") >= theta)
-      .select("a_id", "b_id", "jaccard")
-      .localCheckpoint()
-    shingled.unpersist()
-    sigs.unpersist()
-    out
-  }
-
-  /** LSH band keys for an arbitrary documents frame — the index-build /
-    * probe-build step of the incremental fuzzy-dedup pattern (x20's
-    * band index, and its streaming form in StreamingSpec): `numHashes`
-    * md5-keyed Carter-Wegman min-hashes banded `bandRows` per band, one
-    * (doc_id, band, bv) row per document per band. Identical documents
-    * share every band unconditionally, so an index probe on (band, bv)
-    * can never miss an exact dup; near-dups surface with the standard
-    * banded-LSH probability. */
-  def bandKeys(docs: DataFrame, numHashes: Int, bandRows: Int): DataFrame = {
-    require(numHashes % bandRows == 0, "bands must tile the signature")
-    val shingled = Tables.fanOutForCpu(
-        docs.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"),
-        expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
-    val sigCols = (0 until numHashes).map(k =>
-      min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-    val sigs = shingled
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      .select(col("doc_id"), md5(col("s")).as("m"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
-        expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb"))
-      .groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",",
-          (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-          .as("bv")).as(s"b$b")
-    }
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-  }
-
-  /** DuckDB CTE chain mirroring [[minhashMd5Pairs]] over `input` (any
-    * relation with doc_id + text), ending in `${p}pairs(a_id, b_id,
+  /** DuckDB CTE chain mirroring [[minhashPairs]] over the md5 family
+    * over `input` (any relation with doc_id + text), ending in `${p}pairs(a_id, b_id,
     * jaccard)`. ONE generator shared by the standalone d10 mirror and
     * the x62 composed-pipeline stage, so the two can never drift. */
   def minhashMd5PairsCte(input: String, K: Int, bandRows: Int,
@@ -936,87 +900,27 @@ object Dedup {
 
   /** d10 — ORACLE-EXACT MinHash LSH. d02/d06 are rows-only because
     * their hash family (spark.ml seeds / xxhash64) has no DuckDB
-    * counterpart; this variant keys the Broder scheme on md5, which
-    * both engines compute identically: one md5 per shingle split into
-    * two integer halves (Spark `conv(substring(md5..), 16, 10)` ≡
-    * DuckDB hex-digit fold, verified bit-equal), expanded to 8 hashes
-    * by the Carter-Wegman family h_k = a + k·b. 8 signatures, banded
-    * 2×4; band key is the comma-joined signature slice (pure string
-    * equality on both engines); candidates from the band equi-join only
-    * — never all-pairs, with the d06 mega-bucket cap and dup-cluster
-    * recovery — then exact Jaccard on candidates. The whole chain, cap
-    * included, is mirrored in SQL, so the driver hash-checks the
-    * complete LSH pipeline, not just a pair count. */
+    * counterpart; this variant is [[minhashPairs]] over the md5
+    * Carter-Wegman family, which both engines compute identically: 8
+    * signatures banded 2×4, candidates from the band equi-join only —
+    * never all-pairs, with the mega-bucket cap (64) and dup-cluster
+    * recovery — then exact Jaccard ≥ 0.5 on candidates. The whole
+    * chain, cap included, is mirrored in SQL, so the driver hash-checks
+    * the complete LSH pipeline, not just a pair count. */
   val minhashMd5: QueryDef = {
     val K = 8; val bandRows = 4; val theta = 0.5; val cap = 64
     QueryDef(
       "d10_dedup_minhash_md5",
-      (s, d) => minhashMd5Pairs(Tables.documents(s, d), K, bandRows, theta, cap)
+      (s, d) => minhashPairs(Tables.documents(s, d), MinHashFamily.Md5, K,
+          bandRows, cap, col("jaccard") >= theta)
         .orderBy("a_id", "b_id"),
       Some(s"""WITH ${minhashMd5PairsCte("documents", K, bandRows, theta, cap)}
                SELECT a_id, b_id, jaccard FROM pairs
                ORDER BY a_id, b_id"""))
   }
 
-  /** 60-bit SimHash over the md5 token hash — the oracle-portable
-    * sibling of [[simhash]] (which uses xxhash64, engine-specific).
-    * Same Charikar scheme: per-token hash, per-bit ±1 votes, sign-pack. */
-  def simhashMd5(docs: DataFrame): DataFrame = {
-    // The 60 vote sums stay FUSED inside the aggregate (each computes
-    // its ±1 on the fly from `h`): the alternative — pre-projecting 60
-    // int vote columns before the agg — was measured 2× slower (3.3 s
-    // vs 1.6 s focused sf0.1 median) because every token row then
-    // carries 60 materialized ints into the aggregation hash map. The
-    // r9 JIT variance this form once showed (1.2-2.5 s spread) was
-    // cured by the banded-signature localCheckpoint, not by agg shape:
-    // post-fix 4-JVM spread is 1.52-1.90 s (±12%).
-    val hashed = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .select(col("doc_id"), expr(sparkMd5Int60("tok")).as("h"))
-    val voteCols = (0 until 60).map { i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"b$i")
-    }
-    val votes = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-    val packed = (0 until 60).map { i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    votes.select(col("doc_id"), packed.as("simhash"))
-  }
-
-  /** Banded candidate pairs over [[simhashMd5]] signatures: 4×15-bit
-    * bands, equi-join candidates, hamming filter. The ONE implementation
-    * both the registered d11 query and its spec assert on. */
-  def simhashMd5BandedPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val sh = simhashMd5(docs)
-    // localCheckpoint: the banded frame feeds BOTH sides of the
-    // candidate self-join, and without materialization Spark plans the
-    // whole signature pipeline (tokenize → md5 → 60 vote aggregates)
-    // twice — the dominant stage of the query, recomputed verbatim
-    // (r9 focused bench: ~2× on m05/d11). The materialized frame is
-    // tiny relative to the corpus (4 rows/doc × ~32 bytes — text never
-    // enters it), so at 100 TB this is a deliberate signatures-table
-    // write, not a cache of the input.
-    val bands = sh.select(col("doc_id"), col("simhash"),
-      explode(expr(
-        "transform(sequence(0, 3), b -> struct(b AS band, " +
-          "shiftright(simhash, b * 15) & 32767 AS bv))")).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .localCheckpoint()
-    val a = bands.select(col("doc_id").as("a_id"),
-      col("simhash").as("a_sh"), col("band"), col("bv"))
-    val b = bands.select(col("doc_id").as("b_id"),
-      col("simhash").as("b_sh"), col("band"), col("bv"))
-    a.join(b, Seq("band", "bv")).filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_sh", "b_sh").distinct()
-      .withColumn("hamming", expr("bit_count(a_sh ^ b_sh)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** d11 — ORACLE-EXACT banded SimHash near-dup pairs: [[simhashMd5]]
-    * signatures split into 4×15-bit bands (pigeonhole-exact at hamming
+  /** d11 — ORACLE-EXACT banded SimHash near-dup pairs: the md5-family
+    * [[simhash]] signatures split into 4×15-bit bands (pigeonhole-exact at hamming
     * ≤ 3, like d09), candidates from the band equi-join only, and the
     * ENTIRE chain — 60 per-bit vote aggregates, sign-packing, banding,
     * hamming filter — mirrored in DuckDB SQL. d03/d09 stay as the
@@ -1025,7 +929,9 @@ object Dedup {
     val maxHamming = 3
     QueryDef(
       "d11_dedup_simhash_md5",
-      (s, d) => simhashMd5BandedPairs(Tables.documents(s, d), maxHamming)
+      (s, d) => simhashBandPairs(
+          simhash(Tables.documents(s, d), SimHashFamily.Md5), 15, 4, 0,
+          maxHamming)
         .orderBy("a_id", "b_id"),
       Some {
         s"""WITH $simhashMd5SigsSql,
@@ -1045,8 +951,8 @@ object Dedup {
   }
 
   /** DuckDB CTE chain `toks → hx → votes → sigs` producing `(doc_id,
-    * sh)` — the one SQL mirror of [[simhashMd5]], shared by the d11
-    * and d21 oracles. */
+    * sh)` — the one SQL mirror of [[simhash]] over the md5 family,
+    * shared by the d11 and d21 oracles. */
   def simhashMd5SigsSql: String = {
     val votes = (0 until 60).map(i =>
       s"sum(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS b$i")
@@ -1063,10 +969,10 @@ object Dedup {
   }
 
   /** d21 — ORACLE-EXACT multi-probe SimHash pairs at Hamming ≤ 7: the
-    * md5-portable twin of d03's restated contract. [[simhashMd5]]'s
+    * md5-portable twin of d03's restated contract. The md5-family
     * 60-bit signature in 4×15-bit bands with probe radius 1 (16 probe
     * keys per band — the band value XOR {0, each single bit}); by the
-    * multi-index pigeonhole ([[multiProbePairs]]) candidates cover
+    * multi-index pigeonhole ([[simhashBandPairs]]) candidates cover
     * EVERY pair at hamming ≤ 7, and the hamming filter makes the
     * output exactly the all-pairs result at that radius. The ENTIRE
     * chain — votes, sign-pack, banding, probe expansion, equi-join,
@@ -1076,8 +982,10 @@ object Dedup {
     val maxHamming = 7
     QueryDef(
       "d21_dedup_simhash_multiprobe",
-      (s, d) => multiProbePairs(simhashMd5(Tables.documents(s, d)), 15, 4,
-        maxHamming).orderBy("a_id", "b_id"),
+      (s, d) => simhashBandPairs(
+          simhash(Tables.documents(s, d), SimHashFamily.Md5), 15, 4, 1,
+          maxHamming)
+        .orderBy("a_id", "b_id"),
       Some {
         val masks = (Seq(0L) ++ (0 until 15).map(1L << _)).mkString(", ")
         s"""WITH $simhashMd5SigsSql,
@@ -1556,48 +1464,21 @@ object Dedup {
     * engine-dependent); buckets are floor(10·j) on an exact-rational
     * j, clamped to 9.
     *
-    * Scale shape: same candidate generation as d10 (band equi-join,
-    * never all-pairs); the signature comparison joins the 8-column sig
-    * rows pairwise on the candidate list (candidate-bounded), and the
-    * report is a ≤10-row aggregate. */
+    * Scale shape: d10's shingle, signature and band steps and its band
+    * equi-join (never all-pairs), without the bucket cap; the signature
+    * comparison joins the 8-column sig rows pairwise on the candidate
+    * list (candidate-bounded), and the report is a ≤10-row aggregate. */
   val minhashCalibration: QueryDef = {
     val K = 8; val bandRows = 4
     QueryDef(
       "d17_minhash_calibration",
       (s, d) => {
-        val docs = Tables.documents(s, d)
-        val shingled = Tables.fanOutForCpu(
-            docs.select(col("doc_id"), col("text")), col("doc_id"))
-          .select(col("doc_id"),
-            expr(s"array_distinct(${shingleExpr("text")})").as("sh"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sigCols = (0 until K).map(k =>
-          min(expr(s"ha + $k * hb")).as(s"sig_$k"))
-        val sigs = shingled
-          .select(col("doc_id"), explode(col("sh")).as("sg"))
-          .select(col("doc_id"), md5(col("sg")).as("m"))
-          .select(col("doc_id"),
-            expr("CAST(conv(substring(m, 2, 15), 16, 10) AS BIGINT)").as("ha"),
-            expr("CAST(conv(substring(m, 17, 14), 16, 10) AS BIGINT)").as("hb"))
-          .groupBy("doc_id")
-          .agg(sigCols.head, sigCols.tail: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bandCols = (0 until K / bandRows).map { b =>
-          struct(lit(b).as("band"),
-            concat_ws(",",
-              (0 until bandRows).map(r => col(s"sig_${b * bandRows + r}")): _*)
-              .as("bv")).as(s"b$b")
-        }
-        val bands = sigs.select(col("doc_id"),
-          explode(array(bandCols: _*)).as("bb"))
-          .select(col("doc_id"), col("bb.band").as("band"),
-            col("bb.bv").as("bv"))
-        val cand = bands.select(col("doc_id").as("a_id"), col("band"),
-          col("bv"))
-          .join(bands.select(col("doc_id").as("b_id"), col("band"),
-            col("bv")), Seq("band", "bv"))
-          .filter(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct()
+        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+        val fam = MinHashFamily.Md5
+        val shingled = minhashShingles(Tables.documents(s, d), fam).persist(lvl)
+        val sigs = minhashSignatures(shingled, fam, K).persist(lvl)
+        val bands = minhashBands(sigs, fam, K, bandRows)
+        val cand = bandJoin(bands, bands).distinct()
         val matchExpr = (0 until K)
           .map(k => s"IF(a_sig_$k = b_sig_$k, 1L, 0L)").mkString(" + ")
         val sa = sigs.select(

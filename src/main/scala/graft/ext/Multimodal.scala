@@ -163,7 +163,7 @@ object Multimodal {
         val feats = mediaFrame(s, d)
           .select(col("doc_id"),
             expr(Dedup.sparkMd5Int60("CAST(blob AS STRING)")).as("ha"),
-            expr("CAST(conv(substring(md5(CAST(blob AS STRING)), 17, 14), 16, 10) AS BIGINT)")
+            expr(Dedup.sparkMd5IntSlice("CAST(blob AS STRING)", 17, 14))
               .as("hb"))
           .select(col("doc_id"), expr(sparkEmbed).as("f"))
         val probes = feats.filter(col("doc_id") < 3)
@@ -224,7 +224,8 @@ object Multimodal {
         val decoded = media.select(col("doc_id"),
           col("blob").cast("string").as("text"))
         val meta = media.select(col("doc_id"), col("meta.source").as("source"))
-        Dedup.simhashMd5BandedPairs(decoded, maxHamming)
+        Dedup.simhashBandPairs(
+            Dedup.simhash(decoded, Dedup.SimHashFamily.Md5), 15, 4, 0, maxHamming)
           .join(meta.select(col("doc_id").as("a_id"), col("source").as("a_source")),
             "a_id")
           .join(meta.select(col("doc_id").as("b_id"), col("source").as("b_source")),
@@ -385,10 +386,10 @@ object Multimodal {
         import org.apache.spark.sql.expressions.Window
         val base = mediaFrame(s, d).select(col("doc_id"),
           expr(Dedup.sparkMd5Int60("CAST(blob AS STRING)")).as("ha"),
-          expr("CAST(conv(substring(md5(CAST(blob AS STRING)), 17, 14), 16, 10) AS BIGINT)")
+          expr(Dedup.sparkMd5IntSlice("CAST(blob AS STRING)", 17, 14))
             .as("hb"),
           expr(Dedup.sparkMd5Int60("concat('img:', CAST(blob AS STRING))")).as("hc"),
-          expr("CAST(conv(substring(md5(concat('img:', CAST(blob AS STRING))), 17, 14), 16, 10) AS BIGINT)")
+          expr(Dedup.sparkMd5IntSlice("concat('img:', CAST(blob AS STRING))", 17, 14))
             .as("hd"))
         val txt = base.filter(col("doc_id") < nQ)
           .select(col("doc_id").as("q_id"), expr(sparkTextEmb).as("tf"))

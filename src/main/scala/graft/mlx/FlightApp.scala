@@ -1,6 +1,6 @@
 package graft.mlx
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Runnable replacement for the reference's driver program
   * (`spark-submit ... Main <dataset.csv>...`): same CLI shape — one or
@@ -21,15 +21,10 @@ object FlightApp {
       "usage: FlightApp <planes.csv> <flights.csv> [flights2.csv ...]")
     val verbose = args.contains("-v")
     val paths = args.filterNot(_ == "-v")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-flight")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN",
+      Some("graft-flight"))
 
     val planes = FlightPipeline.readStringly(spark, paths.head)
     val flights = FlightPipeline.loadMany(spark, paths.tail.toSeq)

@@ -156,13 +156,18 @@ object FlightPipeline {
     df
   }
 
-  /** A3/A4 — label and pairwise Pearson correlations in ONE aggregate. */
+  /** A3/A4 — label and pairwise Pearson correlations in ONE aggregate.
+    * r = cov / (σa·σb) over population moments; a pair with a constant
+    * column (σ = 0, e.g. `Year` on single-year input, which P5 keeps)
+    * reads r = 0. `corr` itself divides by that zero variance and
+    * throws DIVIDE_BY_ZERO under ANSI mode; `try_divide` yields null. */
   def correlations(df: DataFrame, cols: Seq[String]): Map[(String, String), Double] = {
     val pairs = for {
       (a, i) <- cols.zipWithIndex; b <- cols.drop(i + 1)
     } yield (a, b)
     val aggs = pairs.map { case (a, b) =>
-      corr(col(a), col(b)).as(s"${a}__$b")
+      try_divide(covar_pop(col(a), col(b)),
+        stddev_pop(col(a)) * stddev_pop(col(b))).as(s"${a}__$b")
     }
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     pairs.zipWithIndex.map { case ((a, b), i) =>

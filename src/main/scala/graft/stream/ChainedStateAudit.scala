@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.core.Sessions
 
 /** State-size audit for st21's CHAINED stateful query (VERDICT r11 ask
   * #4): [[Events.cepAlarmStream]] runs TWO stateful operators in one
@@ -139,13 +140,7 @@ object ChainedStateAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "STATE_SIZE_CHAINED.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("local[8]", "8", "WARN")
     val audit = run(spark, sfDir)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), audit.json)
     println(audit.json)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 
 /** Late-data audit harness (VERDICT r9 #8): documents the watermark
   * contract of the streaming tumbling aggregate the way PLANS.txt
@@ -284,13 +284,7 @@ object LateDataAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "LATE_DATA.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("local[8]", "8", "WARN")
     val json = fullJson(spark, sfDir)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(json)

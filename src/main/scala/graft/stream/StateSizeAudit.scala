@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 
 /** State-size audit for the stream-stream joins (VERDICT r10 ask #8):
   * extends the LATE_DATA.json discipline to the JOIN state stores —
@@ -256,13 +256,7 @@ object StateSizeAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "STATE_SIZE.json"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("local[8]", "8", "WARN")
     val audit = run(spark, sfDir)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), audit.json)
     println(audit.json)

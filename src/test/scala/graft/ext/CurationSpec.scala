@@ -376,10 +376,10 @@ class CurationSpec extends AnyFunSuite {
     }
     // equivalence: the full-corpus LSH (cap disabled) restricted to
     // mixed pairs finds exactly the same set
-    val full = Dedup.minhashMd5Pairs(
+    val full = Dedup.minhashPairs(
         spark.read.parquet(s"$sf/documents.parquet"),
-        numHashes = 8, bandRows = 4, theta = 0.5,
-        maxBucketSize = Int.MaxValue)
+        Dedup.MinHashFamily.Md5, K = 8, bandRows = 4,
+        maxBucketSize = Int.MaxValue, keep = col("jaccard") >= 0.5)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")))
       .flatMap { case (a, b) =>
         if (isNew(a) && !isNew(b)) Some((a, b))

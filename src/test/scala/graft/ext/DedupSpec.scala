@@ -17,6 +17,23 @@ class DedupSpec extends AnyFunSuite {
   val unrelated = "one two three four five six seven eight nine ten " +
     "eleven twelve thirteen fourteen fifteen sixteen"
 
+  val xx = Dedup.SimHashFamily.XxHash64
+  val md = Dedup.SimHashFamily.Md5
+
+  /** d06's pair list: the xxhash64 MinHash core reported as Jaccard
+    * distance < 0.95. */
+  def nativePairs(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
+    Dedup.minhashPairs(df, Dedup.MinHashFamily.XxHash64, 16, 4, 64,
+        lit(1.0) - col("jaccard") < 0.95)
+      .collect()
+      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
+        (1.0 - r.getAs[Double]("jaccard"))).toMap
+
+  /** d10's pair list: the md5 MinHash core, Jaccard ≥ 0.5. */
+  def md5Pairs(df: org.apache.spark.sql.DataFrame) =
+    Dedup.minhashPairs(df, Dedup.MinHashFamily.Md5, 8, 4, 64,
+      col("jaccard") >= 0.5)
+
   lazy val docs = Seq(
     (0L, base), (1L, base), (2L, nearDup), (3L, unrelated))
     .toDF("doc_id", "text")
@@ -63,7 +80,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs distance 0, near-dup close, unrelated far") {
-    val sh = Dedup.simhash(docs).collect()
+    val sh = Dedup.simhash(docs, xx).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sh(0L), sh(1L)) == 0)
@@ -72,9 +89,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("native minhash finds exact and near dups with correct jaccard values") {
-    val pairs = Dedup.minhashNativePairs(docs, 0.95).collect()
-      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
-        r.getAs[Double]("jaccard_dist")).toMap
+    val pairs = nativePairs(docs)
     // identical docs always collide on every band; distance exactly 0
     assert(pairs((0L, 1L)) == 0.0, pairs.mkString(","))
     // near-dup must be surfaced (deterministic with these seeds/data) —
@@ -87,13 +102,14 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("banded simhash: finds the near-dup pair and is a subset of all-pairs") {
-    val banded = Dedup.simhashBandedPairs(docs, 16).collect()
+    val banded = Dedup.simhashBandPairs(Dedup.simhash(docs, xx), 16, 4, 0, 16)
+      .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
     // identical docs (hamming 0) and the 1-token edit must collide on a band
     assert(banded.contains((0L, 1L)))
     assert(banded.contains((0L, 2L)))
     // subset of the exact all-pairs result at the same radius
-    val sh = Dedup.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sh = Dedup.simhash(docs, xx).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exact = (for {
       a <- sh.keys; b <- sh.keys if a < b
       if java.lang.Long.bitCount(sh(a) ^ sh(b)) <= 16
@@ -171,11 +187,11 @@ class DedupSpec extends AnyFunSuite {
     // pigeonhole: ≤ 7 errors over 4 bands leave some band with ≤ 1,
     // and probe radius 1 enumerates every such band value
     val corpus = graft.core.Tables.documents(spark, TestSpark.sf0001)
-    val mp = Dedup.multiProbePairs(Dedup.simhash(corpus), 16, 4, 7)
+    val mp = Dedup.simhashBandPairs(Dedup.simhash(corpus, xx), 16, 4, 1, 7)
       .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
         r.getAs[Int]("hamming")).toMap
-    val sh = Dedup.simhash(corpus).collect()
+    val sh = Dedup.simhash(corpus, xx).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exact = (for {
       a <- sh.keys; b <- sh.keys if a < b
@@ -188,11 +204,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d21 multi-probe over md5 signatures (4×15-bit bands) is exact at ≤ 7") {
-    val mp = Dedup.multiProbePairs(Dedup.simhashMd5(docs), 15, 4, 7)
+    val mp = Dedup.simhashBandPairs(Dedup.simhash(docs, md), 15, 4, 1, 7)
       .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
         r.getAs[Int]("hamming")).toMap
-    val sh = Dedup.simhashMd5(docs).collect()
+    val sh = Dedup.simhash(docs, md).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exact = (for {
       a <- sh.keys; b <- sh.keys if a < b
@@ -205,9 +221,10 @@ class DedupSpec extends AnyFunSuite {
   test("banded simhash at hamming ≤ 3 equals all-pairs exactly (pigeonhole recall)") {
     // 3 differing bits can dirty at most 3 of the 4 16-bit bands, so one
     // band always collides: the d09 banded path is EXACT at this radius
-    val banded = Dedup.simhashBandedPairs(docs, 3).collect()
+    val banded = Dedup.simhashBandPairs(Dedup.simhash(docs, xx), 16, 4, 0, 3)
+      .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
-    val sh = Dedup.simhash(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sh = Dedup.simhash(docs, xx).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val exact = (for {
       a <- sh.keys; b <- sh.keys if a < b
       if java.lang.Long.bitCount(sh(a) ^ sh(b)) <= 3
@@ -216,7 +233,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("md5 minhash (d10): identical docs at jaccard 1.0, unrelated absent") {
-    val pairs = Dedup.minhashMd5Pairs(docs).collect()
+    val pairs = md5Pairs(docs).collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
         r.getAs[Double]("jaccard")).toMap
     // identical docs share every signature, collide on every band
@@ -233,13 +250,29 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("md5 hash family is deterministic across invocations (no seed state)") {
-    val a = Dedup.minhashMd5Pairs(docs).collect().toSeq.sortBy(_.toString)
-    val b = Dedup.minhashMd5Pairs(docs).collect().toSeq.sortBy(_.toString)
+    val a = md5Pairs(docs).collect().toSeq.sortBy(_.toString)
+    val b = md5Pairs(docs).collect().toSeq.sortBy(_.toString)
     assert(a == b)
   }
 
+  test("null-text documents pair with nothing under either MinHash family") {
+    // `documents.text` is nullable; the DuckDB mirror gives a null text
+    // NULL shingles and pairs it with nothing, so the Spark side must
+    // not report two null-text docs as exact duplicates of each other
+    val withNulls = docs.union(
+      Seq[(Long, String)]((10L, null), (11L, null)).toDF("doc_id", "text"))
+    val d06 = nativePairs(withNulls)
+    val d10 = md5Pairs(withNulls).collect()
+      .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
+    for ((fam, ids) <- Seq("xxhash64" -> d06.keySet, "md5" -> d10)) {
+      assert(ids.contains((0L, 1L)), s"$fam lost the real dup: $ids")
+      assert(!ids.exists { case (a, b) => a >= 10L || b >= 10L },
+        s"$fam paired a null-text doc: $ids")
+    }
+  }
+
   test("md5 simhash (d11): identical docs at hamming 0; equals all-pairs at radius 3") {
-    val sh = Dedup.simhashMd5(docs).collect()
+    val sh = Dedup.simhash(docs, md).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // identical docs: identical signature
     assert(sh(0L) == sh(1L))
@@ -251,7 +284,7 @@ class DedupSpec extends AnyFunSuite {
       if java.lang.Long.bitCount(sh(a) ^ sh(b)) <= 3
     } yield (a, b)).toSet
     // the PRODUCTION banding path (shared by the registered d11 query)
-    val banded = Dedup.simhashMd5BandedPairs(docs, 3)
+    val banded = Dedup.simhashBandPairs(Dedup.simhash(docs, md), 15, 4, 0, 3)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
     assert(banded == exact)
     assert(banded.contains((0L, 1L)))

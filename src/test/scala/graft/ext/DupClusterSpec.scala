@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -17,10 +18,12 @@ class DupClusterSpec extends AnyFunSuite {
     val docs = ((0L until 20L).map(i => (i, boiler)) :+
       (99L, "completely different words nothing shared here at all ok"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashNativePairs(docs, 0.95, maxBucketSize = 5)
+    // d06's form: the xxhash64 core as Jaccard distance < 0.95
+    val pairs = Dedup.minhashPairs(docs, Dedup.MinHashFamily.XxHash64,
+        16, 4, maxBucketSize = 5, keep = lit(1.0) - col("jaccard") < 0.95)
       .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
-        r.getAs[Double]("jaccard_dist")).toMap
+        (1.0 - r.getAs[Double]("jaccard"))).toMap
     // every duplicate pairs with the min-id representative at distance 0
     (1L until 20L).foreach { i =>
       assert(pairs.get((0L, i)).contains(0.0), s"missing dup (0,$i)")
@@ -35,7 +38,8 @@ class DupClusterSpec extends AnyFunSuite {
     val docs = ((0L until 20L).map(i => (i, boiler)) :+
       (99L, "completely different words nothing shared here at all ok"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashMd5Pairs(docs, maxBucketSize = 5)
+    val pairs = Dedup.minhashPairs(docs, Dedup.MinHashFamily.Md5, 8, 4,
+        maxBucketSize = 5, keep = col("jaccard") >= 0.5)
       .collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
         r.getAs[Double]("jaccard")).toMap

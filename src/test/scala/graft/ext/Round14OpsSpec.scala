@@ -43,7 +43,9 @@ class Round14OpsSpec extends AnyFunSuite {
     // stage 2 — the d10 pair generator on the s1 frame; greater ids drop
     val s1df = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id").isin(s1.toSeq: _*))
-    val bIds = Dedup.minhashMd5Pairs(s1df, 8, 4, 0.5, 64).collect()
+    val bIds = Dedup.minhashPairs(s1df, Dedup.MinHashFamily.Md5, 8, 4, 64,
+        col("jaccard") >= 0.5)
+      .collect()
       .map(_.getLong(1)).toSet
     val s2 = s1 -- bIds
     // stage 3 — t22's standalone flag table, five structural rules

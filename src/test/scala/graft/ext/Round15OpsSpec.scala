@@ -44,7 +44,9 @@ class Round15OpsSpec extends AnyFunSuite {
     val (s1, s2cc) = stage2(sf, cc = true)
     val s1df = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id").isin(s1.toSeq: _*))
-    val pairs = Dedup.minhashMd5Pairs(s1df, 8, 4, 0.5, 64).collect()
+    val pairs = Dedup.minhashPairs(s1df, Dedup.MinHashFamily.Md5, 8, 4, 64,
+        col("jaccard") >= 0.5)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val find = minRoots(pairs)
     val members = pairs.flatMap(p => Seq(p._1, p._2)).toSet
@@ -79,8 +81,9 @@ class Round15OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
 
-    val pairs = Dedup.minhashMd5Pairs(
-        spark.read.parquet(s"$tmp/documents.parquet"), 8, 4, 0.5, 64)
+    val pairs = Dedup.minhashPairs(
+        spark.read.parquet(s"$tmp/documents.parquet"),
+        Dedup.MinHashFamily.Md5, 8, 4, 64, col("jaccard") >= 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 3L), (2L, 3L)),
       s"constructed corpus no longer yields the path pair graph: $pairs")

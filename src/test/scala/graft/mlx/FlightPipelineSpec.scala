@@ -147,6 +147,23 @@ class FlightPipelineSpec extends AnyFunSuite {
     assert(pruned.columns.toSeq == Seq("a", "c_indep"))
   }
 
+  test("correlations: a constant column reads r = 0 instead of dividing by zero") {
+    import spark.implicits._
+    // single-year input: P5 keeps Year even when it is constant, and
+    // corr() on a zero-variance column throws DIVIDE_BY_ZERO under ANSI
+    val df = (1 to 50).map(i => (2000, i, i * 3 + i % 7, 100 - i))
+      .toDF("Year", "a", "b_like_a", "c_anti_a")
+    val r = FlightPipeline.correlations(df, df.columns.toSeq)
+    assert(r(("Year", "a")) == 0.0 && r(("Year", "b_like_a")) == 0.0 &&
+      r(("Year", "c_anti_a")) == 0.0, r.toString)
+    assert(r(("a", "b_like_a")) > 0.99, r.toString)
+    assert(math.abs(r(("a", "c_anti_a")) + 1.0) < 1e-12, r.toString)
+    // the pruner keeps Year and drops the later column of each
+    // correlated pair
+    val pruned = FlightPipeline.dropCorrelatedAuto(df, 0.95)
+    assert(pruned.columns.toSeq == Seq("Year", "a"))
+  }
+
   /** Seeded synthetic flights with a learnable signal
     * (ArrDelay ≈ f(DepDelay)) for model-training smoke. */
   private def syntheticFlights(n: Int): DataFrame = {

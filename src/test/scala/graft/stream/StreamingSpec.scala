@@ -587,7 +587,10 @@ class StreamingSpec extends AnyFunSuite {
     val other = "one two three four five six seven eight nine ten " +
       "eleven twelve"
     def processBatch(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      val b = graft.ext.Dedup.bandKeys(batch, 8, 4).localCheckpoint()
+      import graft.ext.Dedup._
+      val fam = MinHashFamily.Md5
+      val b = minhashBands(minhashSignatures(minhashShingles(batch, fam),
+        fam, 8), fam, 8, 4).localCheckpoint()
       if (new java.io.File(indexDir).exists()) {
         val idx = spark.read.parquet(indexDir)
           .withColumnRenamed("doc_id", "old_id")
